@@ -33,6 +33,8 @@ import json
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
+from hyperspace_spark.indexes.base import FallBackToFull
+
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
@@ -57,6 +59,19 @@ class IvfIndexConfig:
 
     def referenced_columns(self) -> list[str]:
         return [self.id_col, self.vec_col]
+
+
+CAN_HANDLE_DELETED_FILES = False
+
+
+def config_from_properties(name: str, p: dict) -> IvfIndexConfig:
+    return IvfIndexConfig(
+        name,
+        vec_col=p["vecCol"],
+        id_col=p["idCol"],
+        n_clusters=p["nClusters"],
+        pq_m=p.get("pqM"),
+    )
 
 
 PQ_K = 256  # codebook size per subspace: one uint8 code byte
@@ -366,6 +381,111 @@ def partial_recluster(
     return centroids, split_ids
 
 
+def refresh_incremental(r) -> None:
+    """Assign-only IVF increment (standard FAISS/Milvus append path): new
+    vectors join the FROZEN quantizer's clusters, only their rows are
+    written, existing cluster files carry through.  Drift escalation:
+    appends beyond maxAssignOnlyRatio of the corpus PARTIALLY re-cluster
+    — only clusters grown past reclusterOversizeFactor x the average are
+    re-KMeans'd (split), the rest still carry (bounded rewrite bytes,
+    OptimizeAction.scala's per-bucket discipline).  Appends beyond
+    maxReclusterRatio force a full refit — a badly drifted quantizer
+    degrades recall silently, which is worse than the rebuild.  DELETES
+    never touch the quantizer: lineage-built indexes drop the deleted
+    files' rows from exactly the index files holding them
+    (drop_deleted_rows — centroids and codebooks frozen, recall
+    untouched by construction); only lineage-free (legacy) indexes, or a
+    delete landing together with recluster-scale appends, pay the refit.
+    The ratio is appended bytes vs the PREVIOUSLY INDEXED corpus: divided
+    by the live total it would asymptote below 1.0 no matter how much
+    lands, and maxReclusterRatio could never trigger the full refit."""
+    from pyspark.sql import functions as F
+
+    from hyperspace_spark.config import DATA_FILE_ID_COLUMN
+
+    props, conf, ratio = r.props, r.conf, r.append_ratio
+    if r.deleted and not props.get("lineage"):
+        raise FallBackToFull()
+    if ratio > conf.ann_max_recluster_ratio:
+        raise FallBackToFull()
+    if r.deleted and ratio > conf.ann_max_assign_only_ratio:
+        # Splitting clusters while also dropping rows makes the
+        # rewrite-bytes bound meaningless — full refit.
+        raise FallBackToFull()
+    if props.get("pqM") and ratio > conf.ann_max_assign_only_ratio:
+        # PQ rows carry codes, not vectors: partial re-clustering would
+        # need the originals back from the source (a corpus-scale read)
+        # — the full refit is the honest cost at that drift level.
+        raise FallBackToFull()
+    skip_files: list[str] = []
+    if r.deleted:
+        skip_files = drop_deleted_rows(r.spark, r.entry, r.deleted_ids(), r.data_dir)
+    if not r.appended:
+        r.carry(skip_files=skip_files)
+    elif ratio > conf.ann_max_assign_only_ratio:
+        new_centroids, split_ids = partial_recluster(
+            r.spark,
+            r.entry,
+            r.read_appended(),
+            r.data_dir,
+            oversize_factor=conf.ann_recluster_oversize_factor,
+        )
+        # nClusters stays the CONFIGURED target (actual k =
+        # len(centroids)): a later full refresh re-balances the grown
+        # quantizer back to the configured k.
+        props["centroids"] = new_centroids
+        # Carry only the UNTOUCHED clusters' old files; split clusters
+        # were rewritten by partial_recluster.
+        r.carry(skip_subdirs=[f"cluster={c}" for c in split_ids])
+    else:
+        assigned = assign_to_centroids(
+            r.read_appended(), props["centroids"], props["idCol"], props["vecCol"]
+        )
+        if props.get("pqM"):
+            # Frozen-codebook encode: the appended vectors get the same
+            # m-byte codes the build would assign, so old and new rows
+            # score identically at query time.
+            lin = [DATA_FILE_ID_COLUMN] if DATA_FILE_ID_COLUMN in assigned.columns else []
+            assigned = assigned.select(
+                "vec_id",
+                _encode_udf(props["codebooks"])(F.col("unit_vec")).alias("codes"),
+                *lin,
+                "cluster",
+            )
+        # append: a delete-rewrite may already have written surviving
+        # rows under this version dir.
+        assigned.write.partitionBy("cluster").mode("append").parquet(r.data_dir)
+        # The old cluster files keep their cluster=N subpath (minus any
+        # files the delete-rewrite replaced).
+        r.carry(skip_files=skip_files)
+
+
+def optimize_group_key(entry, path: str) -> str | None:
+    """The ``cluster=N`` partition of an index file: per-CLUSTER
+    compaction is the ANN analog of per-bucket.  Assign-only refreshes
+    accumulate one small file per touched cluster per refresh; rows
+    never change cluster, so ann_search's partition pruning is preserved
+    by construction."""
+    base = entry.index_data_dirs[-1].rstrip("/")
+    rel = path[len(base) + 1 :] if path.startswith(base + "/") else ""
+    return rel.split("/", 1)[0] if "/" in rel else None
+
+
+def optimize_rewrite(spark: "SparkSession", entry, data_dir: str, version: int, paths=None) -> None:
+    """Quick: the given small files into one file per cluster (they are
+    sub-threshold by definition: one task suffices).  Full: every
+    cluster rewritten to one file."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(json.loads(entry.derived_properties["schemaJson"]))
+    reader = spark.read.schema(schema).option("basePath", entry.index_data_dirs[-1].rstrip("/"))
+    if paths is None:
+        df = reader.parquet(*entry.index_data_dirs).repartition("cluster")
+    else:
+        df = reader.parquet(*paths).coalesce(1)
+    df.write.partitionBy("cluster").mode("overwrite").parquet(data_dir)
+
+
 def drop_deleted_rows(
     spark: "SparkSession", entry, deleted_ids: list[int], data_dir: str
 ) -> list[str]:
@@ -531,7 +651,7 @@ def ann_search(
     payload = "codes" if props.get("pqM") else "unit_vec"
     idx = idx.select("vec_id", payload, "cluster")
     if appended:
-        from hyperspace_spark.hyperspace import _relation_reader
+        from hyperspace_spark.indexes.base import _relation_reader
 
         new_df = _relation_reader(spark, entry.relations[0], with_base_path=True).load(
             [f.path for f in appended]
@@ -787,7 +907,7 @@ def ann_join(
         # assign to the FROZEN centroids on the fly (what incremental
         # refresh would persist) and join the same probe path (encoding
         # with the frozen codebooks for PQ).
-        from hyperspace_spark.hyperspace import _relation_reader
+        from hyperspace_spark.indexes.base import _relation_reader
 
         new_df = _relation_reader(spark, entry.relations[0], with_base_path=True).load(
             [f.path for f in appended]

@@ -20,6 +20,7 @@ should be sized so each bucket is a few hundred MB at the target scale.
 from __future__ import annotations
 
 import json
+import re
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
@@ -29,6 +30,9 @@ from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
+
+# saveAsTable bucketed file naming: part-00000-<uuid>_00003.c000.snappy.parquet
+_BUCKET_FILE_RE = re.compile(r"_(\d{5})\.c\d+")
 
 
 @dataclass
@@ -55,6 +59,20 @@ class CoveringIndexConfig(IndexConfig):
 
     def referenced_columns(self) -> list[str]:
         return list(self.indexed_columns) + list(self.included_columns)
+
+
+# Rows are materialized, so deleted source files need the lineage column.
+CAN_HANDLE_DELETED_FILES = False
+
+
+def config_from_properties(name: str, p: dict) -> CoveringIndexConfig:
+    return CoveringIndexConfig(
+        name,
+        p["indexedColumns"],
+        p["includedColumns"],
+        num_buckets=p.get("numBuckets"),
+        where=p.get("filterPredicate"),
+    )
 
 
 def table_name(index_name: str, version: int) -> str:
@@ -156,25 +174,15 @@ def create_index_data(
 ) -> dict:
     """Build and write one version of covering-index data; returns derived
     properties for the log entry."""
-    from pyspark.sql import functions as F
-
     tbl = table_name(index_name, version)
     cols = config.referenced_columns()
     pred_props = {}
     where = getattr(config, "where", None)
     if where:
         df, pred_props = _apply_partial_predicate(df, where)
-    projected = df
     if conf.lineage_enabled:
-        projected = with_lineage(df, spark, files, tracker)
-    # Nested fields flatten to top-level "__hs_nested.a.b.c" columns
-    # (reference: ResolverUtils nested prefix, util/ResolverUtils.scala:86).
-    select_exprs = [
-        F.col(c).alias(NESTED_PREFIX + c) if "." in c else F.col(c) for c in cols
-    ]
-    if conf.lineage_enabled:
-        select_exprs.append(F.col(DATA_FILE_ID_COLUMN))
-    projected = projected.select(*select_exprs)
+        df = with_lineage(df, spark, files, tracker)
+    projected = covering_slice(df, cols, conf.lineage_enabled)
 
     bucket_cols = [flattened_name(c) for c in config.indexed_columns]
     num_buckets = getattr(config, "num_buckets", None) or conf.resolve_num_buckets(
@@ -190,6 +198,81 @@ def create_index_data(
         "tableName": tbl,
         **pred_props,
     }
+
+
+def covering_slice(df: "DataFrame", cols: list[str], lineage: bool) -> "DataFrame":
+    """The indexed slice of a source frame: ``cols`` with nested fields
+    flattened to top-level "__hs_nested.a.b.c" columns (reference:
+    ResolverUtils nested prefix, util/ResolverUtils.scala:86), plus the
+    lineage column when the frame carries it."""
+    from pyspark.sql import functions as F
+
+    return df.select(
+        *[F.col(c).alias(NESTED_PREFIX + c) if "." in c else F.col(c) for c in cols],
+        *([F.col(DATA_FILE_ID_COLUMN)] if lineage else []),
+    )
+
+
+def refresh_incremental(r) -> None:
+    """Append-only deltas (the common 100 TB shape) write ONLY the
+    appended rows as additional bucket files and carry the indexed files
+    into the new version: zero read or write amplification on indexed
+    data.  Several files per bucket are fine for Spark's bucketed scan
+    (it groups by the bucket id in the file name); quick optimize later
+    compacts them.  Deletes rewrite the index minus the deleted files'
+    rows (lineage anti-filter, reference left-anti semantics)."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    props = r.props
+    lineage = props.get("lineage", False)
+    if r.deleted and not lineage:
+        from hyperspace_spark.hyperspace import HyperspaceException
+
+        raise HyperspaceException("cannot handle deleted files without lineage")
+    parts = []
+    if r.deleted:
+        old = r.spark.read.parquet(*r.entry.index_data_dirs)
+        parts.append(old.filter(~F.col(DATA_FILE_ID_COLUMN).isin(r.deleted_ids())))
+    if r.appended:
+        cols = props["indexedColumns"] + props["includedColumns"]
+        parts.append(covering_slice(r.read_appended(), cols, lineage))
+    write_version(r.spark, reduce(DataFrame.unionByName, parts), r.entry, r.version, r.data_dir)
+    if not r.deleted:
+        r.carry()
+
+
+def optimize_group_key(entry, path: str) -> int | None:
+    """Bucket id of an index data file (saveAsTable naming).  Rows from
+    bucket b re-hash to bucket b (same murmur3, same numBuckets), so a
+    bucketBy write of just a bucket's small files replaces exactly that
+    bucket (reference OptimizeAction.scala:96-114)."""
+    m = _BUCKET_FILE_RE.search(path.rsplit("/", 1)[-1])
+    return None if m is None else int(m.group(1))
+
+
+def optimize_rewrite(spark: "SparkSession", entry, data_dir: str, version: int, paths=None) -> None:
+    from pyspark.sql.types import StructType
+
+    props = entry.derived_properties
+    if paths is None:
+        df = spark.read.parquet(*entry.index_data_dirs)
+    else:
+        schema = StructType.fromJson(json.loads(props["schemaJson"]))
+        df = spark.read.schema(schema).parquet(*paths)
+    write_version(spark, df, entry, version, data_dir)
+
+
+def write_version(spark: "SparkSession", df: "DataFrame", entry, version: int, data_dir: str) -> None:
+    """Bucketed write of index rows into a new version under the entry's
+    bucket spec (CI and TXT postings alike)."""
+    props = entry.derived_properties
+    tbl = table_name(entry.name, version)
+    bucket_cols = [flattened_name(c) for c in props["indexedColumns"]]
+    write_bucketed(spark, df, bucket_cols, props["numBuckets"], data_dir, tbl)
+    props["tableName"] = tbl
 
 
 def _apply_partial_predicate(df: "DataFrame", where: str) -> tuple:
@@ -256,12 +339,6 @@ def write_bucketed(
         .mode(mode)
         .saveAsTable(tbl)
     )
-
-
-import re as _re
-
-# saveAsTable bucketed file naming: part-00000-<uuid>_00003.c000.snappy.parquet
-_BUCKET_FILE_RE = _re.compile(r"_(\d{5})\.c\d+")
 
 
 def bucket_pruned_files(entry, lits) -> list[str] | None:

@@ -24,7 +24,6 @@ from hyperspace_spark.config import DATA_FILE_ID_COLUMN
 from hyperspace_spark.indexes.base import IndexConfig
 from hyperspace_spark.indexes.sketches import BloomFilterSketch, Sketch, sketch_from_json
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo
-from hyperspace_spark.metadata.signature import file_based_signature
 from hyperspace_spark.planner.expr import BoolOp, Expr, NotExpr
 
 if TYPE_CHECKING:
@@ -41,6 +40,18 @@ class DataSkippingIndexConfig(IndexConfig):
 
     def referenced_columns(self) -> list[str]:
         return [c for s in self.sketches for c in s.columns]
+
+
+# One row per FILE, intersected with the LIVE file set at query time
+# (rules.py deleted_keys): deletes need no lineage
+# (DataSkippingIndex.canHandleDeletedFiles = true in the reference).
+CAN_HANDLE_DELETED_FILES = True
+# Index data is one tiny table: quick optimize compacts all of it.
+optimize_group_key = None
+
+
+def config_from_properties(name: str, p: dict) -> DataSkippingIndexConfig:
+    return DataSkippingIndexConfig(name, [sketch_from_json(s) for s in p["sketches"]])
 
 
 def _norm_file_col(col):
@@ -99,14 +110,9 @@ def create_index_data(
 ) -> dict:
     """groupBy(input_file_name()) sketch aggregation + broadcast id join
     (reference: DataSkippingIndex.createIndexData :291-317)."""
-    from pyspark.sql import functions as F
-
-    per_file = _sketch_per_file(df, config.sketches)
-    idmap = spark.createDataFrame(
-        [(_file_key(f.path), tracker.add_or_get(f)) for f in files],
-        f"_hs_file string, {DATA_FILE_ID_COLUMN} long",
+    index_df = _sketch_rows(
+        spark, df, config.sketches, [(f.path, tracker.add_or_get(f)) for f in files]
     )
-    index_df = per_file.join(F.broadcast(idmap), "_hs_file", "inner").drop("_hs_file")
 
     # Size-targeted repartition (reference: DataSkippingIndex.scala:196-204):
     # ~1 KB per row estimate; clamp by the max-file-count knob.
@@ -118,16 +124,20 @@ def create_index_data(
     }
 
 
-def refresh_incremental(
-    spark: "SparkSession",
-    entry,
-    conf,
-    appended: list[FileInfo],
-    deleted: list[FileInfo],
-    mgr,
-    version: int,
-    fs,
-):
+def _sketch_rows(spark, df, sketches, file_ids) -> "DataFrame":
+    """One sketch row per source file, keyed by the file's id from
+    ``file_ids`` ((path, id) pairs) through a broadcast join."""
+    from pyspark.sql import functions as F
+
+    idmap = spark.createDataFrame(
+        [(_file_key(path), i) for path, i in file_ids],
+        f"_hs_file string, {DATA_FILE_ID_COLUMN} long",
+    )
+    per_file = _sketch_per_file(df, sketches)
+    return per_file.join(F.broadcast(idmap), "_hs_file", "inner").drop("_hs_file")
+
+
+def refresh_incremental(r) -> None:
     """Sketch only the appended files; drop rows of deleted files by id
     (reference: RefreshIncrementalAction + DataSkippingIndex.scala:90-103
     left-anti semantics — expressed as a NOT IN filter over the tiny
@@ -135,51 +145,25 @@ def refresh_incremental(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    tracker = entry.file_id_tracker
-    config = DataSkippingIndexConfig(
-        entry.name, [sketch_from_json(s) for s in entry.derived_properties["sketches"]]
-    )
-    old = spark.read.schema(
-        StructType.fromJson(json.loads(entry.derived_properties["schemaJson"]))
-    ).parquet(*entry.index_data_dirs)
-    if deleted:
-        ids = [tracker.get(f) for f in deleted]
-        old = old.filter(~F.col(DATA_FILE_ID_COLUMN).isin([i for i in ids if i is not None]))
-    parts = [old]
-    if appended:
-        appended = [FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f)) for f in appended]
-        rel = entry.relations[0]
-        reader = spark.read.format(rel.file_format)
-        if rel.data_schema_json:
-            reader = reader.schema(StructType.fromJson(json.loads(rel.data_schema_json)))
-        if rel.partition_columns:
-            reader = reader.option("basePath", rel.root_paths[0])
-        new_src = reader.load([f.path for f in appended])
-        per_file = _sketch_per_file(new_src, config.sketches)
-        idmap = spark.createDataFrame(
-            [(_file_key(f.path), f.id) for f in appended],
-            f"_hs_file string, {DATA_FILE_ID_COLUMN} long",
+    index_df = r.spark.read.schema(
+        StructType.fromJson(json.loads(r.props["schemaJson"]))
+    ).parquet(*r.entry.index_data_dirs)
+    if r.deleted:
+        index_df = index_df.filter(~F.col(DATA_FILE_ID_COLUMN).isin(r.deleted_ids()))
+    if r.appended:
+        sketches = config_from_properties(r.entry.name, r.props).sketches
+        file_ids = [(f.path, f.id) for f in r.appended]
+        index_df = index_df.unionByName(
+            _sketch_rows(r.spark, r.read_appended(), sketches, file_ids)
         )
-        parts.append(per_file.join(F.broadcast(idmap), "_hs_file", "inner").drop("_hs_file"))
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    data_dir = mgr.data_dir(version)
-    merged.repartition(1).write.mode("overwrite").parquet(data_dir)
+    index_df.repartition(1).write.mode("overwrite").parquet(r.data_dir)
 
-    indexed = entry.source_files_by_key()
-    for f in deleted:
-        indexed.pop(f.key(), None)
-    for f in appended:
-        indexed[f.key()] = f
-    entry.relations[0].files = list(indexed.values())
-    entry.signature = file_based_signature(entry.relations[0].files)
-    entry.index_data_dirs = [data_dir]
-    entry.data_version = version
-    entry.content_files = [
-        FileInfo(s.path, s.size, s.mtime) for s in fs.list_files_recursive(data_dir)
-    ]
-    return entry
+
+def optimize_rewrite(spark: "SparkSession", entry, data_dir: str, version: int, paths=None) -> None:
+    # Skipping index data is tiny (one row per source file): one file.
+    spark.read.parquet(*entry.index_data_dirs).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(data_dir)
 
 
 # ---------------------------------------------------------------------------

@@ -23,6 +23,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Iterable
 
+# Postings share the covering index's flat bucketed layout, so quick
+# optimize compacts them per bucket exactly like it.
+from hyperspace_spark.indexes.covering import optimize_group_key, optimize_rewrite  # noqa: F401
+
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
@@ -37,6 +41,15 @@ class InvertedTextIndexConfig:
 
     def referenced_columns(self) -> list[str]:
         return [self.id_col, self.text_col]
+
+
+CAN_HANDLE_DELETED_FILES = False
+
+
+def config_from_properties(name: str, p: dict) -> InvertedTextIndexConfig:
+    return InvertedTextIndexConfig(
+        name, text_col=p["textCol"], id_col=p["idCol"], num_buckets=p["numBuckets"]
+    )
 
 
 def normalize_terms(terms: Iterable) -> list[str]:
@@ -195,6 +208,70 @@ def create_index_data(
     }
 
 
+def refresh_incremental(r) -> None:
+    """Posting increment: the NEW docs' postings write as extra
+    per-bucket files under the same bucket spec and retained bucket
+    files carry into the new version.  r10: DELETES rewrite only the
+    posting files holding the deleted docs' rows (lineage anti-filter —
+    postings carry the source file id), so a delete costs index-bytes of
+    the affected files, never a corpus re-tokenize; the rewritten
+    survivors re-enter through the same bucketed write, so bucket
+    pruning is untouched.  A STALE index still answers exactly either
+    way (query-time anti-filter)."""
+    import json as _json
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from hyperspace_spark.config import DATA_FILE_ID_COLUMN
+    from hyperspace_spark.indexes.covering import lineage_affected_files, write_version
+
+    props = r.props
+    new_postings = None
+    parts, skip_files = [], []
+    if r.appended:
+        new_postings = _doc_postings(
+            r.read_appended(), props["idCol"], props["textCol"], DATA_FILE_ID_COLUMN
+        ).persist()
+        parts.append(new_postings)
+    dead_ids = r.deleted_ids()
+    if r.deleted:
+        schema = StructType.fromJson(_json.loads(props["schemaJson"]))
+        old = r.spark.read.schema(schema).parquet(*r.entry.index_data_dirs)
+        skip_files = lineage_affected_files(old, dead_ids)
+        if skip_files:
+            parts.append(
+                r.spark.read.schema(schema)
+                .parquet(*skip_files)
+                .filter(~F.col(DATA_FILE_ID_COLUMN).isin(dead_ids))
+            )
+    if parts:
+        write_version(r.spark, reduce(DataFrame.unionByName, parts), r.entry, r.version, r.data_dir)
+    r.carry(skip_files=skip_files)
+    # Merge the appended files' BM25 corpus stats (docs with >= 1 token,
+    # total tokens) into the per-file stats map — one tiny aggregate over
+    # the (persisted) posting delta, so ranked retrieval stays exact
+    # after refresh; deleted files' stats rows drop (their postings just
+    # left).
+    merged = dict(props.get("fileDocStats") or {})
+    for i in dead_ids:
+        merged.pop(str(i), None)
+    if new_postings is not None:
+        stat_rows = (
+            new_postings.groupBy(DATA_FILE_ID_COLUMN)
+            .agg(
+                F.count_distinct("_doc").alias("_nd"),
+                F.sum("tf").cast("long").alias("_nt"),
+            )
+            .collect()
+        )
+        merged.update({str(row[0]): [int(row["_nd"]), int(row["_nt"])] for row in stat_rows})
+        new_postings.unpersist()
+    props["fileDocStats"] = merged
+
+
 def _probe_hits(
     spark: "SparkSession",
     entry,
@@ -267,7 +344,7 @@ def _probe_hits(
     )
 
     if appended:
-        from hyperspace_spark.hyperspace import _relation_reader
+        from hyperspace_spark.indexes.base import _relation_reader
 
         rel = entry.relations[0]
         raw = _relation_reader(spark, rel, with_base_path=True).load(
@@ -321,7 +398,7 @@ def _corpus_stats(spark: "SparkSession", entry, appended=None, deleted=None):
         n_docs += int(nd)
         n_tokens += int(nt)
     if appended:
-        from hyperspace_spark.hyperspace import _relation_reader
+        from hyperspace_spark.indexes.base import _relation_reader
         from hyperspace_spark.llm.text import tokens
 
         rel = entry.relations[0]

@@ -26,7 +26,7 @@ from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
 from hyperspace_spark.config import DATA_FILE_ID_COLUMN, HyperspaceConf
-from hyperspace_spark.indexes.base import IndexConfig
+from hyperspace_spark.indexes.base import FallBackToFull, IndexConfig
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo
 
 if TYPE_CHECKING:
@@ -59,6 +59,21 @@ class ZOrderCoveringIndexConfig(IndexConfig):
 
     def referenced_columns(self) -> list[str]:
         return list(self.indexed_columns) + list(self.included_columns)
+
+
+CAN_HANDLE_DELETED_FILES = False
+# No per-group file layout: quick optimize re-clusters everything.
+optimize_group_key = None
+
+
+def config_from_properties(name: str, p: dict) -> ZOrderCoveringIndexConfig:
+    return ZOrderCoveringIndexConfig(
+        name,
+        p["indexedColumns"],
+        p["includedColumns"],
+        target_bytes_per_partition=p.get("targetBytesPerPartition"),
+        where=p.get("filterPredicate"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -189,6 +204,23 @@ def make_zaddr_udf(cols: list[str], stats: dict, bits_per_col: int):
     return F.pandas_udf(_zaddr, LongType())
 
 
+def _z_clustered(df: "DataFrame", idx_flat: list[str], n_parts: int, stats: dict, bits: int):
+    """Range-partition + sort by the z-address of the indexed columns
+    (single column: by the column itself, reference :104-113)."""
+    from pyspark.sql import functions as F
+
+    if len(idx_flat) == 1:
+        return df.repartitionByRange(n_parts, _bq(idx_flat[0])).sortWithinPartitions(
+            _bq(idx_flat[0])
+        )
+    zudf = make_zaddr_udf(idx_flat, stats, bits)
+    return (
+        df.withColumn(ZADDR, zudf(*[_bq(c) for c in idx_flat]))
+        .repartitionByRange(n_parts, F.col(ZADDR))
+        .sortWithinPartitions(ZADDR)
+    )
+
+
 def create_index_data(
     spark: "SparkSession",
     df: "DataFrame",
@@ -200,11 +232,7 @@ def create_index_data(
     index_name: str,
     version: int,
 ) -> dict:
-    from pyspark.sql import functions as F
-
-    from hyperspace_spark.indexes.covering import with_lineage
-
-    from hyperspace_spark.indexes.covering import flattened_name
+    from hyperspace_spark.indexes.covering import covering_slice, flattened_name, with_lineage
 
     cols = config.referenced_columns()
     # Nested paths flatten to literal `__hs_nested.a.b` column names — the
@@ -218,13 +246,9 @@ def create_index_data(
         from hyperspace_spark.indexes.covering import _apply_partial_predicate
 
         df, pred_props = _apply_partial_predicate(df, where)
-    projected = df
     if conf.lineage_enabled:
-        projected = with_lineage(df, spark, files, tracker)
-    projected = projected.select(
-        *[F.col(c).alias(flattened_name(c)) if "." in c else F.col(c) for c in cols],
-        *([DATA_FILE_ID_COLUMN] if conf.lineage_enabled else []),
-    )
+        df = with_lineage(df, spark, files, tracker)
+    projected = covering_slice(df, cols, conf.lineage_enabled)
     idx_flat = [flattened_name(c) for c in config.indexed_columns]
 
     source_bytes = sum(f.size for f in files)
@@ -234,21 +258,9 @@ def create_index_data(
     )
     n_parts = max(1, math.ceil(source_bytes / target))
 
-    stats: dict = {}
-    if len(idx_flat) == 1:
-        # Single column: plain range partition + sort (reference :104-113).
-        out = projected.repartitionByRange(n_parts, _bq(idx_flat[0])).sortWithinPartitions(
-            _bq(idx_flat[0])
-        )
-    else:
-        stats = _collect_stats(projected, idx_flat, conf)
-        bits = min(16, 63 // len(idx_flat))
-        zudf = make_zaddr_udf(idx_flat, stats, bits)
-        out = (
-            projected.withColumn(ZADDR, zudf(*[_bq(c) for c in idx_flat]))
-            .repartitionByRange(n_parts, F.col(ZADDR))
-            .sortWithinPartitions(ZADDR)
-        )
+    stats = _collect_stats(projected, idx_flat, conf) if len(idx_flat) > 1 else {}
+    bits = min(16, 63 // len(idx_flat))
+    out = _z_clustered(projected, idx_flat, n_parts, stats, bits)
     out.write.mode("overwrite").parquet(data_dir)
     return {
         "indexedColumns": list(config.indexed_columns),
@@ -257,7 +269,7 @@ def create_index_data(
         "lineage": conf.lineage_enabled,
         "schemaJson": out.schema.json(),
         "zorderStats": stats,
-        "zorderBits": min(16, 63 // max(1, len(idx_flat))),
+        "zorderBits": bits,
         # Persisted so refresh-full rebuilds with the SAME partition
         # sizing the index was created with (not the session default).
         "targetBytesPerPartition": target,
@@ -266,63 +278,69 @@ def create_index_data(
     }
 
 
-def append_index_data(
-    spark: "SparkSession",
-    df: "DataFrame",
-    entry,
-    conf: HyperspaceConf,
-    files: list[FileInfo],
-    tracker: FileIdTracker,
-    data_dir: str,
-) -> dict:
-    """Incremental ZCI refresh: z-cluster ONLY the appended rows into
-    their own files under the new version dir (the caller hardlinks the
-    retained files in afterwards).  Returns ``(new_file_stats,
-    n_new_partitions)`` — the stats merge into the entry's fileStats and
-    the partition count adds to numBuckets so a later OPTIMIZE sizes
-    its compaction to the GROWN data, not the build-time layout.
+def refresh_incremental(r) -> None:
+    """r9: bounded appends z-cluster LOCALLY into their own files
+    (frozen build-time scaling, like the ANN quantizer); retained files
+    carry through and their per-file min/max pruning stays exact — the
+    locally-clustered-delta-over-clustered-base layout production table
+    formats ship between OPTIMIZE runs.  r10: DELETES rewrite only the
+    z-files holding deleted rows via the lineage anti-filter (surviving
+    rows keep their z-sort; the production DELETE shape) — only
+    lineage-free legacy entries or drift beyond
+    zorder.maxIncrementalRatio still re-cluster fully; a later FULL
+    refresh restores one global interleave."""
+    props = r.props
+    if r.deleted and not props.get("lineage"):
+        raise FallBackToFull()
+    if r.append_ratio > r.conf.zorder_max_incremental_ratio:
+        raise FallBackToFull()
+    new_stats, n_new_parts = {}, 0
+    if r.appended:
+        new_stats, n_new_parts = _append_index_data(r)
+    skip_files: list[str] = []
+    if r.deleted:
+        skip_files, survivor_stats = drop_deleted_rows(
+            r.spark, r.entry, r.deleted_ids(), r.data_dir
+        )
+        new_stats = {**new_stats, **survivor_stats}
+    r.carry(skip_files=skip_files)
+    if props.get("fileStats"):
+        merged = dict(props["fileStats"])
+        for p in skip_files:
+            merged.pop(p.rsplit("/", 1)[-1], None)
+        merged.update(new_stats)
+        # Same log-size guard collect_file_stats enforces at build: past
+        # the cap, drop the stats (pruning disables, correctness
+        # unaffected) rather than bloat every future log entry.
+        props["fileStats"] = merged if len(merged) <= _FILESTATS_MAX_FILES else {}
+    # OPTIMIZE sizes its per-layout compaction from numBuckets: account
+    # for the appended partitions or the grown index compacts back into
+    # the build-time count (files ~2x target after repeated appends).
+    props["numBuckets"] = int(props.get("numBuckets", 0)) + int(n_new_parts)
+
+
+def _append_index_data(r) -> tuple[dict, int]:
+    """Z-cluster ONLY the appended rows into their own files under the
+    new version dir (retained files are carried in afterwards).  Returns
+    ``(new_file_stats, n_new_partitions)``.
 
     Scaling uses the PERSISTED build-time stats (frozen, like the ANN
     quantizer): appended values outside the original [min, max] clip to
     the boundary z-cells, which degrades CLUSTERING for those rows but
     never CORRECTNESS — query-time pruning compares predicates against
-    per-file min/max of the ACTUAL values, computed fresh here.  Global
-    interleave quality is restored by the next full refresh; until then
-    the layout is exactly what production table formats ship (locally
-    clustered deltas over a clustered base).  Deletes and drift beyond
-    zorder.maxIncrementalRatio still take the full re-cluster."""
-    import math
+    per-file min/max of the ACTUAL values, computed fresh here."""
+    from hyperspace_spark.indexes.covering import covering_slice, flattened_name
 
-    from pyspark.sql import functions as F
-
-    from hyperspace_spark.indexes.covering import flattened_name, with_lineage
-
-    props = entry.derived_properties
+    props = r.props
     cols = list(props["indexedColumns"]) + list(props["includedColumns"])
-    projected = df
-    if props.get("lineage"):
-        projected = with_lineage(df, spark, files, tracker)
-    projected = projected.select(
-        *[F.col(c).alias(flattened_name(c)) if "." in c else F.col(c) for c in cols],
-        *([DATA_FILE_ID_COLUMN] if props.get("lineage") else []),
-    )
+    projected = covering_slice(r.read_appended(), cols, bool(props.get("lineage")))
     idx_flat = [flattened_name(c) for c in props["indexedColumns"]]
-    target = props.get("targetBytesPerPartition") or conf.zorder_target_bytes_per_partition
-    n_parts = max(1, math.ceil(sum(f.size for f in files) / target))
-    if len(idx_flat) == 1:
-        out = projected.repartitionByRange(
-            n_parts, _bq(idx_flat[0])
-        ).sortWithinPartitions(_bq(idx_flat[0]))
-    else:
-        zudf = make_zaddr_udf(idx_flat, props["zorderStats"], props["zorderBits"])
-        out = (
-            projected.withColumn(ZADDR, zudf(*[_bq(c) for c in idx_flat]))
-            .repartitionByRange(n_parts, F.col(ZADDR))
-            .sortWithinPartitions(ZADDR)
-        )
-    out.write.mode("overwrite").parquet(data_dir)
+    target = props.get("targetBytesPerPartition") or r.conf.zorder_target_bytes_per_partition
+    n_parts = max(1, math.ceil(sum(f.size for f in r.appended) / target))
+    out = _z_clustered(projected, idx_flat, n_parts, props["zorderStats"], props["zorderBits"])
+    out.write.mode("overwrite").parquet(r.data_dir)
     # Stats over ONLY the new files (the dir holds nothing else yet).
-    return collect_file_stats(spark, data_dir, list(props["indexedColumns"])), n_parts
+    return collect_file_stats(r.spark, r.data_dir, list(props["indexedColumns"])), n_parts
 
 
 def drop_deleted_rows(
@@ -563,21 +581,18 @@ def stats_pruned_files(entry, cond) -> list[str] | None:
     return kept
 
 
-def rewrite_zorder_data(spark: "SparkSession", df: "DataFrame", props: dict, data_dir: str) -> None:
+def optimize_rewrite(spark: "SparkSession", entry, data_dir: str, version: int, paths=None) -> None:
     """Optimize-time compaction: re-range-partition + sort the existing
     index data (z-address already materialized for multi-column).
     Recomputes fileStats — the old per-file ranges are void after the
     rewrite."""
-    from pyspark.sql import functions as F
-
     from hyperspace_spark.indexes.covering import flattened_name
 
+    props = entry.derived_properties
+    df = spark.read.parquet(*entry.index_data_dirs)
     key = ZADDR if ZADDR in df.columns else flattened_name(props["indexedColumns"][0])
     n = max(1, int(props.get("numBuckets", 1)))
     df.repartitionByRange(n, _bq(key)).sortWithinPartitions(_bq(key)).write.mode(
         "overwrite"
     ).parquet(data_dir)
     props["fileStats"] = collect_file_stats(spark, data_dir, props["indexedColumns"])
-
-
-_ = json  # reserved for future stats serialization tweaks

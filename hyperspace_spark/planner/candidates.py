@@ -12,6 +12,7 @@ from dataclasses import dataclass, field
 
 from hyperspace_spark.config import HyperspaceConf
 from hyperspace_spark.fs import FileSystem
+from hyperspace_spark.indexes import KINDS
 from hyperspace_spark.metadata.entry import FileInfo, IndexLogEntry, States
 from hyperspace_spark.metadata.signature import file_based_signature
 from hyperspace_spark.planner import ir
@@ -262,14 +263,13 @@ def _hybrid_candidate(
         if reasons:
             reasons.add(e.name, TOO_MUCH_DELETED, f"{deleted_bytes}/{indexed_bytes} bytes deleted")
         return None
-    # Covering-family indexes materialize ROWS, so deleted files require
-    # the lineage column to filter their rows out.  Data-skipping indexes
-    # hold one row per FILE and the rule intersects with the LIVE file
-    # set at query time (rules.py deleted_keys), so deletes need no
-    # lineage — the reference likewise has
-    # DataSkippingIndex.canHandleDeletedFiles = true.
-    if deleted and e.derived_kind != "DS" and not e.derived_properties.get(
-        "lineage", False
+    # Row-materializing indexes need the lineage column to filter deleted
+    # files' rows out; a kind that says otherwise (data skipping: one row
+    # per FILE, intersected with the live files) needs none.
+    if (
+        deleted
+        and not KINDS[e.derived_kind].CAN_HANDLE_DELETED_FILES
+        and not e.derived_properties.get("lineage", False)
     ):
         if reasons:
             reasons.add(e.name, NO_DELETE_SUPPORT, "index built without lineage")

@@ -1,12 +1,13 @@
-"""r15 optimization-round helper: capture .explain('formatted') plans
-and isolated walls for a named set of queries, from EITHER the current
-tree or the pristine HEAD worktree (pass the repo root as argv[1]).
+"""Capture .explain('formatted') plans and isolated walls for a named
+set of contract queries, from EITHER the current tree or another
+checkout (pass its root as --repo), for an optimization round's
+plan-diff evidence.
 
 Usage:
-    python scripts/r15_capture.py <repo_root> <suffix> q1 q2 ...
+    python scripts/capture_plans.py <round> <suffix> q1 q2 ... [--repo ROOT]
 
-Writes plans/r14/<query>_<suffix>.txt (into THIS repo's plans dir) and
-prints one wall-clock line per query (min of 2 collect()s, same
+Writes plans/r<NN>/<query>_<suffix>.txt (into THIS repo's plans dir)
+and prints one wall-clock line per query (min of 2 collect()s, same
 protocol as bench.py).  Streaming queries execute at construction; for
 those the captured text is the batch plan of the returned frame plus
 the recorded state-operator metrics when available.
@@ -14,17 +15,26 @@ the recorded state-operator metrics when available.
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
 import time
 
-REPO = sys.argv[1]
-SUFFIX = sys.argv[2]
-NAMES = sys.argv[3:]
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15")
+ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+ap.add_argument("round", type=lambda r: int(str(r).lstrip("r")), help="round number, e.g. 15 or r15")
+ap.add_argument("suffix", help="file-name suffix naming the variant (e.g. base, new)")
+ap.add_argument("names", nargs="+", help="contract query names")
+ap.add_argument("--repo", default=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                help="checkout whose hyperspace_spark is imported (default: this one)")
+args = ap.parse_args()
 
-sys.path.insert(0, REPO)
+TAG = f"r{args.round:02d}"
+OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", TAG)
+
+sys.path.insert(0, args.repo)
+# Python workers import the package too (UDF-backed queries).
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [args.repo, os.environ.get("PYTHONPATH")]))
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -33,7 +43,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 spark = (
     SparkSession.builder.master(f"local[{cpus}]")
-    .appName(f"r15_capture_{SUFFIX}")
+    .appName(f"{TAG}_capture_{args.suffix}")
     .config("spark.sql.shuffle.partitions", str(cpus))
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -55,8 +65,8 @@ from hyperspace_spark.llm import dedup as _dedup  # noqa: E402
 workspace(spark, sf_dir)
 os.makedirs(OUT_DIR, exist_ok=True)
 
-for name in NAMES:
-    spark.sparkContext.setJobDescription(f"r15:{name}")
+for name in args.names:
+    spark.sparkContext.setJobDescription(f"{TAG}:{name}")
     df = QUERIES[name](spark, sf_dir)
     buf = io.StringIO()
     stdout = sys.stdout
@@ -72,8 +82,8 @@ for name in NAMES:
         df.collect()
         best = min(best, time.perf_counter() - t0)
     _dedup.release_caches()
-    with open(os.path.join(OUT_DIR, f"{name}_{SUFFIX}.txt"), "w") as f:
-        f.write(f"-- {name} ({SUFFIX}) wall(min-of-2 collect): {best:.3f}s\n")
+    with open(os.path.join(OUT_DIR, f"{name}_{args.suffix}.txt"), "w") as f:
+        f.write(f"-- {name} ({args.suffix}) wall(min-of-2 collect): {best:.3f}s\n")
         f.write(buf.getvalue())
     print(f"{name}\t{best:.3f}")
 spark.stop()

@@ -166,6 +166,33 @@ def test_refresh_full_on_delta_uses_snapshot(spark, dtab, tmp_path):
     assert entry.signature == hashlib.md5(f"delta:{dtab}@2".encode()).hexdigest()
 
 
+def test_incremental_refresh_on_delta_signs_with_snapshot_version(spark, dtab, tmp_path):
+    """Incremental refresh re-signs the entry through the source provider
+    (Delta: root@version), so with hybrid scan off the refreshed index
+    still matches the table exactly and serves."""
+    from hyperspace_spark import DataSkippingIndexConfig, MinMaxSketch
+
+    hs = Hyperspace(spark, system_path=str(tmp_path / "idx"))
+    hs.create_index(
+        read_delta(spark, dtab),
+        DataSkippingIndexConfig("d_ds", [MinMaxSketch(["o_orderkey"])]),
+    )
+    o = table(spark, "orders")
+    write_delta(o.filter("o_orderkey <= 100"), dtab, mode="append")  # v2
+    hs.refresh_index("d_ds", "incremental")
+    key = o.agg(F.max("o_orderkey")).collect()[0][0]
+    spark.conf.set("spark.hyperspace.index.hybridscan.enabled", "false")
+    try:
+        q = read_delta(spark, dtab).filter(F.col("o_orderkey") == key).select(
+            "o_orderkey", "o_custkey"
+        )
+        fast, used = hs._apply_with_info(q)
+        assert used == ["d_ds"], hs.why_not(q)
+        assert rows_equal(q, fast)
+    finally:
+        spark.conf.set("spark.hyperspace.index.hybridscan.enabled", "true")
+
+
 def test_overwrite_mode_replaces_content(spark, tmp_path):
     root = str(tmp_path / "ow_delta")
     o = table(spark, "orders")

@@ -111,13 +111,37 @@ def test_refresh_incremental(spark, hs, mutable_src):
     assert rows_equal(q, fast)
 
 
-def test_refresh_quick_then_hybrid(spark, hs, mutable_src):
-    make_index(hs, spark, mutable_src)
+@pytest.mark.parametrize("kind", ["CI", "DS"])
+def test_refresh_quick_then_hybrid(spark, hs, mutable_src, kind):
+    from hyperspace_spark import DataSkippingIndexConfig, RowCountSketch
+
+    if kind == "CI":
+        make_index(hs, spark, mutable_src)
+    else:
+        hs.create_index(
+            spark.read.parquet(mutable_src),
+            DataSkippingIndexConfig("mut_idx", [RowCountSketch()]),
+        )
     _append_files(spark, mutable_src)
     hs.refresh_index("mut_idx", "quick")
-    q = q_of(spark, mutable_src)
+
+    def query():
+        if kind == "CI":
+            return q_of(spark, mutable_src)
+        # metadata-only count(*): the row-count sketch answers it
+        return spark.read.parquet(mutable_src).agg(F.count("*").alias("n"))
+
+    q = query()
     fast, used = hs._apply_with_info(q)
     assert used == ["mut_idx"]
+    assert rows_equal(q, fast)
+    # An incremental refresh absorbs the recorded quick delta and clears
+    # it, whatever the kind.
+    hs.refresh_index("mut_idx", "incremental")
+    assert hs.index("mut_idx").collect()[0].numAppendedFiles == 0
+    q = query()
+    fast, used = hs._apply_with_info(q)
+    assert used == ["mut_idx"], hs.why_not(q)
     assert rows_equal(q, fast)
 
 
@@ -233,13 +257,21 @@ def test_optimize_rejects_bad_mode(spark, tmp_path):
     assert used == ["m_idx"]
 
 
-def test_refresh_incremental_preserves_reader_options(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["CI", "DS"])
+def test_refresh_incremental_preserves_reader_options(spark, tmp_path, kind):
     """Appended files must be read with the SAME reader options as the
     build scan: a header=true CSV appended without options would parse
-    header rows as data and union corrupt rows into the index."""
+    header rows as data and union corrupt rows into the index (or, for
+    data skipping, count the header in the file's row-count sketch)."""
     import shutil
 
-    from hyperspace_spark import CoveringIndexConfig, Hyperspace
+    from hyperspace_spark import (
+        CoveringIndexConfig,
+        DataSkippingIndexConfig,
+        Hyperspace,
+        MinMaxSketch,
+        RowCountSketch,
+    )
     from pyspark.sql import functions as F
 
     src = str(tmp_path / "csv_src")
@@ -248,7 +280,11 @@ def test_refresh_incremental_preserves_reader_options(spark, tmp_path):
     ).csv(src)
     df = spark.read.option("header", "true").option("inferSchema", "true").csv(src)
     hs = Hyperspace(spark, system_path=str(tmp_path / "idx3"))
-    hs.create_index(df, CoveringIndexConfig("csv_idx", ["k"], ["v"]))
+    if kind == "CI":
+        config = CoveringIndexConfig("csv_idx", ["k"], ["v"])
+    else:
+        config = DataSkippingIndexConfig("csv_idx", [MinMaxSketch(["k"]), RowCountSketch()])
+    hs.create_index(df, config)
     # append another header'd CSV file
     spark.range(50, 80).selectExpr("id AS k", "id * 10 AS v").coalesce(1).write.option(
         "header", "true"
@@ -259,9 +295,16 @@ def test_refresh_incremental_preserves_reader_options(spark, tmp_path):
     fast, used = hs._apply_with_info(q)
     assert used == ["csv_idx"], hs.why_not(q)
     assert [(r.k, r.v) for r in fast.collect()] == [(60, 600)]
-    # no header-row garbage made it into the index
-    allrows = hs.apply(df2.select("k", "v")).collect()
-    assert len(allrows) == 80 and all(isinstance(r.k, int) for r in allrows)
+    if kind == "CI":
+        # no header-row garbage made it into the index
+        allrows = hs.apply(df2.select("k", "v")).collect()
+        assert len(allrows) == 80 and all(isinstance(r.k, int) for r in allrows)
+    else:
+        # the appended file's sketch row counts data rows only
+        total = df2.agg(F.count("*").alias("n"))
+        fast, used = hs._apply_with_info(total)
+        assert used == ["csv_idx"], hs.why_not(total)
+        assert fast.collect() == total.collect() == [(80,)]
 
 
 def test_incremental_refresh_appends_only_new_bucket_files(spark, hs, mutable_src, tmp_path):
